@@ -359,9 +359,7 @@ object LakehouseOps {
   private val writeDefaultEvo = QueryDef(
     "icelite_write_default",
     (s, dir) => {
-      s.conf.set("spark.sql.catalog.icelite", "graft.icelite.connector.IceLiteCatalog")
-      s.conf.set("spark.sql.catalog.icelite.warehouse",
-        System.getProperty("java.io.tmpdir") + "/icelite_sql_wh")
+      mountSqlCatalog(s)
       val o = orders(s, dir)
       o.createOrReplaceTempView("orders_src")
       val tbl = s"wdef_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -704,11 +702,7 @@ object LakehouseOps {
   private val sqlCatalog = QueryDef(
     "icelite_sql_catalog",
     (s, dir) => {
-      // one fixed warehouse per JVM: Spark caches catalog instances by name,
-      // so the warehouse conf only takes effect on first initialization
-      s.conf.set("spark.sql.catalog.icelite", "graft.icelite.connector.IceLiteCatalog")
-      s.conf.set("spark.sql.catalog.icelite.warehouse",
-        System.getProperty("java.io.tmpdir") + "/icelite_sql_wh")
+      mountSqlCatalog(s)
       val tbl = s"orders_${java.util.UUID.randomUUID().toString.replace("-", "")}"
       s.sql("CREATE NAMESPACE IF NOT EXISTS icelite.sqldemo")
       s.sql(s"""CREATE TABLE icelite.sqldemo.$tbl (
@@ -736,13 +730,21 @@ object LakehouseOps {
              FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"""),
   )
 
-  /** Shared SQL-catalog mount (one fixed warehouse per JVM — Spark caches
-    * catalog instances by name, so the warehouse conf only takes effect on
-    * first initialization). Returns a fresh unique table name. */
-  private def sqlTable(s: SparkSession, tag: String): String = {
+  /** Mounts the `icelite` SQL catalog on `s` and returns its warehouse:
+    * one fixed warehouse per JVM, because Spark caches catalog instances
+    * by name, so the warehouse conf only takes effect on first
+    * initialization. */
+  private def mountSqlCatalog(s: SparkSession): String = {
+    val wh = System.getProperty("java.io.tmpdir") + "/icelite_sql_wh"
     s.conf.set("spark.sql.catalog.icelite", "graft.icelite.connector.IceLiteCatalog")
-    s.conf.set("spark.sql.catalog.icelite.warehouse",
-      System.getProperty("java.io.tmpdir") + "/icelite_sql_wh")
+    s.conf.set("spark.sql.catalog.icelite.warehouse", wh)
+    wh
+  }
+
+  /** Mounts the SQL catalog (see [[mountSqlCatalog]]) and returns a fresh
+    * unique table name in `icelite.sqldml`. */
+  private def sqlTable(s: SparkSession, tag: String): String = {
+    mountSqlCatalog(s)
     s.sql("CREATE NAMESPACE IF NOT EXISTS icelite.sqldml")
     s"${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
   }
@@ -1742,10 +1744,7 @@ object LakehouseOps {
   private val streamRead = QueryDef(
     "icelite_stream_read",
     (s, dir) => {
-      s.conf.set("spark.sql.catalog.icelite", "graft.icelite.connector.IceLiteCatalog")
-      s.conf.set("spark.sql.catalog.icelite.warehouse",
-        System.getProperty("java.io.tmpdir") + "/icelite_sql_wh")
-      val wh = System.getProperty("java.io.tmpdir") + "/icelite_sql_wh"
+      val wh = mountSqlCatalog(s)
       val o = orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val tbl = s"msrc_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -1788,10 +1787,7 @@ object LakehouseOps {
   private val streamPipe = QueryDef(
     "icelite_stream_pipe",
     (s, dir) => {
-      s.conf.set("spark.sql.catalog.icelite", "graft.icelite.connector.IceLiteCatalog")
-      s.conf.set("spark.sql.catalog.icelite.warehouse",
-        System.getProperty("java.io.tmpdir") + "/icelite_sql_wh")
-      val wh = System.getProperty("java.io.tmpdir") + "/icelite_sql_wh"
+      val wh = mountSqlCatalog(s)
       val o = orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val sfx = java.util.UUID.randomUUID().toString.replace("-", "")
@@ -1834,10 +1830,7 @@ object LakehouseOps {
   private val streamUpsert = QueryDef(
     "icelite_stream_upsert",
     (s, dir) => {
-      s.conf.set("spark.sql.catalog.icelite", "graft.icelite.connector.IceLiteCatalog")
-      s.conf.set("spark.sql.catalog.icelite.warehouse",
-        System.getProperty("java.io.tmpdir") + "/icelite_sql_wh")
-      val wh = System.getProperty("java.io.tmpdir") + "/icelite_sql_wh"
+      val wh = mountSqlCatalog(s)
       val o = orders(s, dir).select(col("o_orderkey"), col("o_totalprice"))
       val sfx = java.util.UUID.randomUUID().toString.replace("-", "")
       val cat = new Catalog(s, wh)

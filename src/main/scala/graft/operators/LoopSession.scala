@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.SparkShims
 
 /** Isolated-session scoping for iterative query loops (CC, PageRank, BPE).
@@ -32,7 +33,14 @@ private[graft] object LoopSession {
   /** A child session whose shuffle width derives from `rows` (capped at the
     * parent's width, so a `SPARK_GRAFT_CPUS`-shaped parent stays the upper
     * bound) and whose AQE is off only in the one-partition regime. The
-    * parent session's conf is read, never written. */
+    * parent session's conf is read, never written.
+    *
+    * The child starts from the builder-time confs only (the SparkContext's
+    * conf, i.e. what [[graft.EngineSession]] set): it does NOT see the
+    * parent's runtime `conf.set`s, such as `Tables.events`' `nanosAsLong`
+    * and UTC settings or an `icelite` catalog mount. Loop bodies must
+    * therefore work on adopted, already-resolved frames, never re-read a
+    * table or catalog through the child. */
   def forRows(parent: SparkSession, rows: Long): SparkSession = {
     val child = parent.newSession()
     val parentParts = parent.conf.get("spark.sql.shuffle.partitions").toLong
@@ -47,7 +55,11 @@ private[graft] object LoopSession {
     * under such a frame is a self-contained LogicalRDD over blocks in the
     * shared block manager, so re-rooting is free — it must NOT be used on
     * lazy plans (they would re-resolve against the target session's
-    * catalog/conf and recompute under its width). */
-  def adopt(df: DataFrame, to: SparkSession): DataFrame =
-    SparkShims.ofRows(to, SparkShims.analyzedPlan(df))
+    * catalog/conf and recompute under its width), and refuses them. */
+  def adopt(df: DataFrame, to: SparkSession): DataFrame = {
+    val plan = SparkShims.analyzedPlan(df)
+    require(plan.isInstanceOf[LogicalRDD],
+      s"LoopSession.adopt needs a localCheckpoint'ed frame, got ${plan.nodeName}")
+    SparkShims.ofRows(to, plan)
+  }
 }

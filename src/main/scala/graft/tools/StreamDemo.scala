@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.streaming.StreamingIngest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -14,12 +13,7 @@ import org.apache.spark.sql.streaming.OutputMode
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val seconds = args.headOption.map(_.toInt).getOrElse(12)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.EngineSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // bursty users: each is active for ~4s then goes idle, so sessions
     // actually close (a `value % 5` user would never be inactive)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Micro-probe for the per-write-job floor (guide §1.1): times N repeated
   * parquet writes of one small table on the bench-shaped session, so the
   * fixed cost every DML's staging write pays (committer setup, task
@@ -18,17 +16,9 @@ object WriteProbe {
     // use the standard lower-median index (ADVICE r19)
     val reps = math.max(1, if (args.length > 0) args(0).toInt else 30)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 2) args(2) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cores = if (args.length > 2) args(2).toInt else graft.EngineSession.defaultCores
     val fan = if (args.length > 3) args(3).toInt else 8
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.fs.file.impl", "graft.icelite.NioLocalFs")
-      .getOrCreate()
+    val spark = graft.EngineSession.builder(cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val o = graft.Tables.orders(spark, sfDir)
     o.count() // warm the scan
@@ -45,15 +35,11 @@ object WriteProbe {
     }
     probe("plain")(p => o.write.parquet(p))
     probe(s"fan$fan")(p => o.repartition(fan).write.parquet(p))
-    probe(s"coal$fan")(p => o.repartition(fan,
+    probe(s"hash$fan")(p => o.repartition(fan,
       org.apache.spark.sql.functions.col("o_orderkey")).write.parquet(p))
     // best-effort cleanup: the probe writes reps x 3 parquet copies of
     // orders; leaving them accumulates GBs across invocations (ADVICE r19)
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(base)).iterator().asScala
-        .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-    } catch { case _: Throwable => }
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(base))
     spark.stop()
   }
 }

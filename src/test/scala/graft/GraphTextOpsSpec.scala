@@ -77,6 +77,16 @@ class GraphTextOpsSpec extends SparkSpec {
     }
   }
 
+  test("LoopSession.adopt refuses a lazy frame") {
+    // a lazy plan would re-resolve against the target session's conf and
+    // catalog and recompute there; only materialized frames may cross
+    val frame = spark.range(10).toDF("id")
+    val e = intercept[IllegalArgumentException](
+      graft.operators.LoopSession.adopt(frame, spark.newSession()))
+    assert(e.getMessage.contains("localCheckpoint"))
+    assert(graft.operators.LoopSession.adopt(frame.localCheckpoint(), spark).count() == 10)
+  }
+
   test("cube levels are mutually consistent") {
     val out = Registry.queries("cube_agg")(spark, sf).collect()
     val byGid = out.groupBy(_.getAs[Long]("gid"))

@@ -10,21 +10,11 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** The engine session (EngineSession) at a fixed 4 cores, so test
+    * plans don't depend on the box; EngineSessionSpec pins the parity. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = EngineSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.icelite.connector.IceLiteExtensions")
-      // same streaming-WAL manager as the Bench/Verify engine sessions, so
-      // StreamingSpec's restart/exactly-once cases cover the configuration
-      // the engine actually runs (FileSystem API instead of FileContext;
-      // no checksum sidecars)
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       // saveAsTable targets (BucketingSpec) must not land in the repo cwd
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_spark_wh").toString)
